@@ -1,9 +1,12 @@
 package graft.codstats
 
+import java.util.concurrent.{ExecutionException, Executors}
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.ops.Stages
 import Model._
 
 /** End-to-end pipeline assembly (SURVEY.md §3 E1): landing JSON →
@@ -41,7 +44,9 @@ object Pipeline {
   /** The reference's cron run loop (`run_and_deploy.sh`: fetch → parse →
     * generate → sync, README.md run-loop docs) as ONE streaming job:
     * landing stream → normalize → foreachBatch appends NEW fact rows →
-    * one report-tree rebuild per tick over the full store.
+    * one report-tree rebuild per tick over the full store
+    * ([[runReports]]: one cached stats view, every report written
+    * concurrently).
     *
     * `Trigger.AvailableNow` makes each invocation one cron tick — drain
     * everything new, refresh reports, stop, resumable from the checkpoint;
@@ -53,12 +58,19 @@ object Pipeline {
     * reflects the last successful run.
     *
     * Idempotency: each batch anti-joins the store's existing
-    * (game_id, player_uno_id) keys before appending — the reference's
-    * INSERT OR IGNORE (its parser does the same NOT-IN over all ingested
-    * keys, parse_matches.sh:580-596). This guards BOTH re-delivered
-    * documents under new filenames AND foreachBatch replays after a crash
-    * between the append and the checkpoint commit. At scale the key read
-    * is column-pruned to the two id columns.
+    * (game_id, player_uno_id) keys and keeps one row per key before
+    * appending — the reference's INSERT OR IGNORE (its parser does the
+    * same NOT-IN over all ingested keys, parse_matches.sh:580-596). This
+    * guards re-delivered documents under new filenames, in the same tick or
+    * a later one, AND foreachBatch replays after a crash between the append
+    * and the checkpoint commit. At scale the key read is column-pruned to
+    * the two id columns. The batch's new rows are sealed once (one scan of
+    * the batch serves the emptiness probe and the append) and released
+    * synchronously, so a long-lived cron process holds no checkpoint
+    * blocks between batches.
+    *
+    * Failure: a report that fails to write fails the call, after every
+    * other report of the tick has been written (see [[runReports]]).
     */
   def continuousRun(spark: SparkSession, landingDir: String,
                     checkpointDir: String, factDir: String, reportDir: String,
@@ -76,21 +88,23 @@ object Pipeline {
       .trigger(Trigger.AvailableNow())
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val fresh = (store() match {
+        // one row per key also within the batch; after the anti-join, whose
+        // shuffle (at scale) already partitions on the key
+        val fresh = Stages.seal((store() match {
           case Some(existing) => Normalize.newGamesOnly(batch, existing)
           case None           => batch
-        }).localCheckpoint()
-        // a zero-row batch must not create a data-less factDir (parquet
-        // schema inference would fail on the next store() read)
-        if (!fresh.isEmpty) {
-          // event-date partitioning (Normalize's production contract): the
-          // derived layer prunes to the dates a report touches, and
-          // compaction works per partition
-          fresh.withColumn("fact_day", to_date(col("ended_at")))
-            .write.mode("append").partitionBy("fact_day").parquet(factDir)
-        }
-        fresh.unpersist()
-        ()
+        }).dropDuplicates("game_id", "player_uno_id"), eager = true)
+        try {
+          // a zero-row batch must not create a data-less factDir (parquet
+          // schema inference would fail on the next store() read)
+          if (!fresh.isEmpty) {
+            // event-date partitioning (Normalize's production contract): the
+            // derived layer prunes to the dates a report touches, and
+            // compaction works per partition
+            fresh.withColumn("fact_day", to_date(col("ended_at")))
+              .write.mode("append").partitionBy("fact_day").parquet(factDir)
+          }
+        } finally Stages.release(Seq(fresh))
       }
       .start()
     q.awaitTermination()
@@ -257,44 +271,93 @@ object Pipeline {
 
   /** Materialize the standard report set under `outDir` — one directory
     * per file the reference frontend loads (write_meta +
-    * write_leaderboards + per-player loops, generate_lookup_data.sh). */
+    * write_leaderboards + per-player loops, generate_lookup_data.sh).
+    *
+    * The reference runs one sqlite3 process per report, one after another.
+    * Here the rebuild is one wave:
+    *  - `ctx.stats` (fact ⨝ players ⨝ tracked modes) is persisted
+    *    (MEMORY_AND_DISK: at scale it spills rather than fails) and
+    *    materialized by one action, so the fact-backed reports read one
+    *    cached relation instead of each rescanning the store and
+    *    re-broadcasting the dims; the mode-category list is collected once;
+    *  - the report writes are independent, so all of them are submitted at
+    *    once to a pool with one thread per write, and Spark's scheduler
+    *    interleaves their jobs on the cluster. The pool is created here, so
+    *    its threads are started by the caller and inherit its local
+    *    properties (job group, job tags);
+    *  - the call returns, or throws, only after every write has finished:
+    *    if any write fails, the first failure in [[reportInventory]] order
+    *    is rethrown with the others attached as suppressed exceptions, and
+    *    every other report has been written by then. The stats cache lives
+    *    for this call only: it is released, blocking, on every path.
+    */
   def runReports(ctx: Context, outDir: String): Unit = {
-    val s = ctx.stats
-    writeJsonReport(ctx.spark.sql(
-      "SELECT unix_millis(current_timestamp()) AS updatedAt"), s"$outDir/meta")
-    writeJsonReport(Reports.seasonsDoc(ctx.seasons), s"$outDir/seasons")
-    // players.json copy (write_meta:56): the dim ships with the site
-    writeJsonReport(ctx.players.toDF(), s"$outDir/players")
-    writeJsonReport(Reports.leaderboards(s), s"$outDir/leaderboards")
-    writeJsonReport(Reports.mostWins(s), s"$outDir/most_wins")
-    writeJsonReport(Reports.mostLastPlaces(s), s"$outDir/most_lastplaces")
-    writeJsonReport(Reports.teamStats(s), s"$outDir/team_leaderboards")
-    writeJsonReport(Reports.recentMatchesDoc(s, ctx.modes), s"$outDir/recent_matches")
-    writeJsonReport(Reports.recentSessions(s, ctx.settings), s"$outDir/recent_sessions")
-    writeJsonReport(Reports.seasonRollup(s, ctx.seasons), s"$outDir/season_rollup")
-    // category list is dimension data (O(10) rows): driver-side collect is
-    // the intended use, same as broadcasting the dim itself
-    val categories = ctx.modes.select(col("category")).distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
-    writeJsonReport(
-      Reports.playerStatsDoc(s, ctx.seasons, ctx.modes, categories),
-      s"$outDir/player_stats")
-    writeJsonReport(Normalize.unknownModes(ctx.valid, ctx.modes), s"$outDir/unknown_modes")
-    // per-(player, season) outputs: partitioned writes replace the
-    // reference's players × seasons query loop; the 'lifetime' season
-    // partition carries the unscoped series
-    Reports.sessions(s, ctx.settings)
-      .write.mode("overwrite").partitionBy("player_id")
-      .json(s"$outDir/sessions")
-    val daily = Reports.perDayBySeason(s, ctx.seasons, ctx.settings)
-      .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-    renameCumalative(Reports.timeSeries(daily,
-        entity = Seq(col("player_id"), col("season_id"))))
-      .write.mode("overwrite").partitionBy("player_id", "season_id")
-      .json(s"$outDir/time_series")
-    renameCumalative(Reports.gameSeriesBySeason(s, ctx.seasons,
-        settings = ctx.settings))
-      .write.mode("overwrite").partitionBy("player_id", "season_id")
-      .json(s"$outDir/game_series")
+    val s = ctx.stats.persist()
+    try {
+      s.count()
+      // category list is dimension data (O(10) rows): driver-side collect is
+      // the intended use, same as broadcasting the dim itself
+      val categories = ctx.modes.select(col("category")).distinct()
+        .collect().map(_.getString(0)).sorted.toSeq
+      concurrently(Seq(
+        () => writeJsonReport(ctx.spark.sql(
+          "SELECT unix_millis(current_timestamp()) AS updatedAt"), s"$outDir/meta"),
+        () => writeJsonReport(Reports.seasonsDoc(ctx.seasons), s"$outDir/seasons"),
+        // players.json copy (write_meta:56): the dim ships with the site
+        () => writeJsonReport(ctx.players.toDF(), s"$outDir/players"),
+        () => writeJsonReport(Reports.leaderboards(s), s"$outDir/leaderboards"),
+        () => writeJsonReport(Reports.mostWins(s), s"$outDir/most_wins"),
+        () => writeJsonReport(Reports.mostLastPlaces(s), s"$outDir/most_lastplaces"),
+        () => writeJsonReport(Reports.teamStats(s), s"$outDir/team_leaderboards"),
+        () => writeJsonReport(Reports.recentMatchesDoc(s, ctx.modes),
+          s"$outDir/recent_matches"),
+        () => writeJsonReport(Reports.recentSessions(s, ctx.settings),
+          s"$outDir/recent_sessions"),
+        // per-(player, season) outputs: partitioned writes replace the
+        // reference's players × seasons query loop; the 'lifetime' season
+        // partition carries the unscoped series
+        () => Reports.sessions(s, ctx.settings)
+          .write.mode("overwrite").partitionBy("player_id")
+          .json(s"$outDir/sessions"),
+        () => writeJsonReport(Reports.seasonRollup(s, ctx.seasons),
+          s"$outDir/season_rollup"),
+        () => writeJsonReport(
+          Reports.playerStatsDoc(s, ctx.seasons, ctx.modes, categories),
+          s"$outDir/player_stats"),
+        () => writeJsonReport(Normalize.unknownModes(ctx.valid, ctx.modes),
+          s"$outDir/unknown_modes"),
+        () => {
+          val daily = Reports.perDayBySeason(s, ctx.seasons, ctx.settings)
+            .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
+          renameCumalative(Reports.timeSeries(daily,
+              entity = Seq(col("player_id"), col("season_id"))))
+            .write.mode("overwrite").partitionBy("player_id", "season_id")
+            .json(s"$outDir/time_series")
+        },
+        () => renameCumalative(Reports.gameSeriesBySeason(s, ctx.seasons,
+            settings = ctx.settings))
+          .write.mode("overwrite").partitionBy("player_id", "season_id")
+          .json(s"$outDir/game_series")))
+    } finally s.unpersist(blocking = true)
+  }
+
+  /** Run independent `tasks` at once, one pool thread each, and return once
+    * all have finished; then rethrow the first failure in `tasks` order,
+    * the later ones attached as suppressed. The threads are created by the
+    * calling thread (a fixed pool starts one thread per submission while
+    * it is below its size), so they inherit its Spark local properties. */
+  private def concurrently(tasks: Seq[() => Unit]): Unit = {
+    val pool = Executors.newFixedThreadPool(tasks.size)
+    try {
+      val futures = tasks.map(t => pool.submit[Unit](() => t()))
+      val failures = futures.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      }
+    } finally pool.shutdown()
   }
 }

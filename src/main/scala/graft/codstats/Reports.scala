@@ -413,12 +413,15 @@ object Reports {
   /** Per-game series — the by-game twin of [[timeSeries]]
     * (generate_lookup_data.sh:827-868: smoothed_10/25 over games in play
     * order; each game contributes matchesPlayed=1 and its monster /
-    * goose-egg flags, parse_matches.sh:509-534). */
+    * goose-egg flags, parse_matches.sh:509-534). Play order is
+    * (ended_at, game_id, player_uno_id): one player on two accounts in one
+    * match has two rows with the same end time, and the fact key breaks
+    * the tie. */
   def gameSeries(stats: DataFrame, ks: Seq[Int] = Seq(10, 25),
                  settings: Settings = Settings(),
                  entity: Seq[Column] = Seq(col("player_id"))): DataFrame = {
     val framed = Frames.rollingSumsAndAvgs(stats,
-      entity, col("ended_at"),
+      entity, Seq(col("ended_at"), col("game_id"), col("player_uno_id")),
       seriesSumMeasures(lit(1L),
         when(col("kills") >= settings.monsterKills, 1L).otherwise(0L),
         when(col("kills") === 0.0, 1L).otherwise(0L)),
@@ -468,7 +471,7 @@ object Reports {
   def timeSeries(daily: DataFrame, ks: Seq[Int] = Seq(3, 7),
                  entity: Seq[Column] = Seq(col("player_id"))): DataFrame = {
     val framed = Frames.rollingSumsAndAvgs(daily,
-      entity, col("day"),
+      entity, Seq(col("day")),
       seriesSumMeasures(col("n_games"), col("monsters"), col("gooseeggs")),
       Seq("kd_ratio" -> col("avg_kd"),
           "score_per_minute" -> col("avg_spm")),

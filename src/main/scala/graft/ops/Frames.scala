@@ -51,12 +51,16 @@ object Frames {
     * + `<name>_cuma` per avg measure. All frames share the one
     * (entity, order) sort — a single shuffle + single ordered scan
     * regardless of how many measures × frames are requested.
+    *
+    * The frames are ROWS frames, so `order` must be unique within an
+    * entity: on a tie the rows' order, and with it each frame, would
+    * depend on the input's partitioning.
     */
-  def rollingSumsAndAvgs(df: DataFrame, entity: Seq[Column], order: Column,
+  def rollingSumsAndAvgs(df: DataFrame, entity: Seq[Column], order: Seq[Column],
                          sumMeasures: Seq[(String, Column)],
                          avgMeasures: Seq[(String, Column)],
                          ks: Seq[Int]): DataFrame = {
-    val base = Window.partitionBy(entity: _*).orderBy(order)
+    val base = Window.partitionBy(entity: _*).orderBy(order: _*)
     val cumW = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val withSums = sumMeasures.foldLeft(df) { case (acc, (name, m)) =>
       ks.foldLeft(acc) { (a, k) =>

@@ -109,6 +109,41 @@ class StreamingIngestSpec extends SparkSpec {
     assert(perDay.size == 2 && perDay.values.forall(_.size == 1))
   }
 
+  test("continuousRun: two copies of one document in one tick store one row") {
+    val landing = Files.createTempDirectory("graft_dup_landing")
+    val fact = Files.createTempDirectory("graft_dup_fact").toString + "/store"
+    val ckpt = Files.createTempDirectory("graft_dup_ckpt")
+    val reports = Files.createTempDirectory("graft_dup_reports")
+    val players = Seq(Model.Player("u1", "p1", is_core = true)).toDS()
+    val seasons = Model.seedSeasons.map { case (id, a, b) => Model.Season(id,
+      java.sql.Timestamp.from(java.time.Instant.parse(a)),
+      java.sql.Timestamp.from(java.time.Instant.parse(b))) }.toDS()
+    val sc = spark.sparkContext
+    // a tick leaves no RDD persisted: neither the batch's sealed rows nor
+    // the report rebuild's stats cache
+    def tick(): Unit = {
+      val before = sc.getPersistentRDDs.keySet.toSet
+      Pipeline.continuousRun(spark, landing.toString, ckpt.toString, fact,
+        reports.toString, players, Model.seedGameModes.toDS(), seasons)
+      val leaked = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(leaked.isEmpty, s"RDDs left persisted: $leaked")
+    }
+    def keys(): Seq[(String, String)] = spark.read.parquet(fact)
+      .select("game_id", "player_uno_id").as[(String, String)].collect().toSeq.sorted
+
+    // first tick, no store yet: the same document under two file names
+    writeDoc(landing, "match_m1_u1.json", "m1", "u1", 1590000000L)
+    writeDoc(landing, "match_m1_u1_copy.json", "m1", "u1", 1590000000L)
+    tick()
+    assert(keys() == Seq(("m1", "u1")))
+    // a later tick against a store: a new document twice, the stored one again
+    writeDoc(landing, "match_m2_u1.json", "m2", "u1", 1590003600L)
+    writeDoc(landing, "match_m2_u1_copy.json", "m2", "u1", 1590003600L)
+    writeDoc(landing, "match_m1_u1_again.json", "m1", "u1", 1590000000L)
+    tick()
+    assert(keys() == Seq(("m1", "u1"), ("m2", "u1")))
+  }
+
   test("continuousRun: a first tick with no data still writes the dim reports") {
     val landing = Files.createTempDirectory("graft_e_landing")
     val fact = Files.createTempDirectory("graft_e_fact").toString + "/store"

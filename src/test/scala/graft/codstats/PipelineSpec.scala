@@ -1,6 +1,14 @@
 package graft.codstats
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.SparkSpec
 import Model._
@@ -286,6 +294,87 @@ class PipelineSpec extends SparkSpec {
       .listFiles().filter(_.getName.startsWith("season_id=")).map(_.getName).toSet
     // alice's games fall in s1; 'lifetime' overlaps everything
     assert(aliceSeasons == Set("season_id=s1", "season_id=lifetime"))
+  }
+
+  /** RDDs persisted while `body` runs that are still persisted after it. */
+  private def leakedRdds(body: => Unit): Set[Int] = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    body
+    spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+  }
+
+  test("runReports: every job of the concurrent rebuild carries the caller's job tag") {
+    val sc = spark.sparkContext
+    val c = ctx // build the context outside the observed window
+    val out = java.nio.file.Files.createTempDirectory("graft_tagged").toString
+    val tag = "pipeline-spec-rebuild"
+    val jobTags = new ConcurrentLinkedQueue[Set[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobTags.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .map(_.split(",").toSet).getOrElse(Set.empty))
+    }
+    ListenerDrain(sc) // earlier jobs' events reach no listener of this test
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    val leaked = try leakedRdds(Pipeline.runReports(c, out))
+      finally {
+        sc.removeJobTag(tag)
+        ListenerDrain(sc)
+        sc.removeSparkListener(listener)
+      }
+    val tags = jobTags.asScala.toSeq
+    assert(tags.size >= Pipeline.reportInventory.size, "at least one job per report")
+    assert(tags.forall(_.contains(tag)), s"untagged jobs: ${tags.count(!_.contains(tag))}")
+    // the stats cache lives for the call only
+    assert(c.stats.storageLevel == StorageLevel.NONE)
+    assert(leaked.isEmpty, s"RDDs left persisted: $leaked")
+  }
+
+  test("runReports: a failed report throws only after every other report is written") {
+    val out = java.nio.file.Files.createTempDirectory("graft_failed").toString
+    // the season dim fails to evaluate: the five season-backed reports fail
+    val broken = ctx.seasons.toDF()
+      .withColumn("season_id", raise_error(lit("season dim unavailable")).cast("string"))
+      .as[Season]
+    val c = ctx.copy(seasons = broken)
+    val leaked = leakedRdds {
+      val thrown = intercept[Exception](Pipeline.runReports(c, out))
+      assert(thrown.getMessage.contains("season dim unavailable"))
+      // seasons is the first failure in inventory order; season_rollup,
+      // player_stats, time_series and game_series ride along as suppressed
+      assert(thrown.getSuppressed.count(_.getMessage.contains("season dim unavailable")) == 4)
+    }
+    val seasonFree = Seq("meta", "players", "leaderboards", "most_wins",
+      "most_lastplaces", "team_leaderboards", "recent_matches",
+      "recent_sessions", "sessions", "unknown_modes")
+    for (r <- seasonFree)
+      assert(new java.io.File(s"$out/$r/_SUCCESS").exists(), s"report $r not written")
+    assert(c.stats.storageLevel == StorageLevel.NONE)
+    assert(leaked.isEmpty, s"RDDs left persisted: $leaked")
+  }
+
+  test("game series: a player on two accounts in one match gets one order on any input layout") {
+    // alice plays m1 on two accounts (same ended_at), then m2 on one
+    val players = Seq(Player("uno-a1", "alice", is_core = true),
+      Player("uno-a2", "alice", is_core = true)).toDS()
+    val stats = Pipeline.fromRawJson(spark,
+      Seq(doc("m1", "uno-a1", t0, kills = 9), doc("m1", "uno-a2", t0, kills = 2),
+          doc("m2", "uno-a1", t0 + 600, kills = 4)).toDF("json"),
+      players, ctx.modes, ctx.seasons).stats
+    val rows = stats.collect().toSeq
+    // the same rows in two layouts: one row per partition, in opposite orders
+    def series(in: Seq[Row]): Seq[(String, String, String, Double, Double)] =
+      Reports.gameSeriesBySeason(spark.createDataFrame(in.asJava, stats.schema),
+          ctx.seasons, Seq(2))
+        .select("season_id", "game_id", "player_uno_id", "kills_s2", "kills_cum")
+        .as[(String, String, String, Double, Double)].collect().toSeq
+        .sortBy(r => (r._1, r._2, r._3))
+    val forward = series(rows)
+    assert(forward == series(rows.reverse))
+    // ties break on the fact key: (m1, uno-a1) frames first
+    assert(forward.filter(_._1 == "s1").map(r => (r._2, r._3, r._5)) == Seq(
+      ("m1", "uno-a1", 9.0), ("m1", "uno-a2", 11.0), ("m2", "uno-a1", 15.0)))
   }
 
   test("player stats doc: one row per player, season-ordered metrics+placements") {
